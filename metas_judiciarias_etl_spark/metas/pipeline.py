@@ -321,29 +321,6 @@ def compute_resumo(court_data: DataFrame) -> DataFrame:
     return computed.selectExpr(*final)
 
 
-def resumo_from_untyped(data: DataFrame) -> DataFrame:
-    """Compute the resumo from an UNTYPED (all-string) court scan by
-    try_cast-projecting the counter columns to double.
-
-    This is the shared-scan path: one string-typed CSV parse feeds both the
-    byte-verbatim Consolidado sink and (through this projection) the metas
-    aggregation, instead of two full parses of the corpus. Semantics vs the
-    typed read: a field-count-malformed row still drops at parse time; a
-    non-numeric CELL becomes NULL here (cell-level coercion, the
-    reference's pd.to_numeric(errors='coerce') posture, C3) where the
-    typed DROPMALFORMED read would drop the whole row. The reference never
-    exercises that case (its corpus is numerically clean); both postures
-    are documented, this one matches pandas more closely."""
-    numeric = [c for c in C.all_numeric_columns() if c in data.columns]
-    projected = data.select(
-        FILE_COL,
-        "sigla_tribunal",
-        "ramo_justica",
-        *[F.col(c).try_cast("double").alias(c) for c in numeric],
-    )
-    return compute_resumo(projected)
-
-
 def stringify_resumo(resumo: DataFrame, sentinel: str = "NA") -> DataFrame:
     """Sink projection (NP:229-242): every cell stringified, NULL → 'NA',
     columns in the reference's lexicographic-block order."""
@@ -356,110 +333,12 @@ def stringify_resumo(resumo: DataFrame, sentinel: str = "NA") -> DataFrame:
     )
 
 
-def _quote_nonnumeric_lines(df: DataFrame) -> DataFrame:
-    """Render each row as the exact ``csv.QUOTE_NONNUMERIC`` byte string
-    pandas emits (Versao_P.py:121-125): numeric cells unquoted through
-    ``str()`` (shortest-round-trip float repr — Spark's JVM cast prints
-    Java sci-notation instead, e.g. ``1.0E20`` vs ``1e+20``, so the
-    formatting must happen Python-side), everything else quoted with
-    internal quotes DOUBLED (Spark's quoteAll would backslash-escape),
-    NULL → ``""``. Arrow-batched ``mapInPandas`` routing every row through
-    the same stdlib csv writer the reference used — parity by
-    construction. This is the P variant's per-court temp STAGING sink
-    (one small file per court), not a hot path; the quoteAll fast path in
-    ``write_csv`` remains the default for stringified frames."""
-    numeric = {
-        f.name
-        for f in df.schema.fields
-        if isinstance(
-            f.dataType,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-             T.FloatType, T.DoubleType, T.DecimalType),
-        )
-    }
-    cols = list(df.columns)
-
-    def fmt(batches):
-        import csv as _csv
-        import io as _io
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            lines = []
-            for row in pdf.itertuples(index=False, name=None):
-                vals: list = []
-                for name, v in zip(cols, row):
-                    if v is None or (isinstance(v, float) and v != v) or pd.isna(v):
-                        vals.append("")  # NULL → "" (quoted empty, like pandas)
-                    elif name in numeric:
-                        # python float/int so the csv module leaves it
-                        # unquoted and str()s it exactly like pandas.
-                        # Arrow batches hand us numpy scalars, for which
-                        # isinstance(np.int64(5), int) is False — check
-                        # np.integer too or int columns print as '5.0'.
-                        vals.append(
-                            int(v)
-                            if isinstance(v, (int, np.integer))
-                            and not isinstance(v, (bool, np.bool_))
-                            else float(v)
-                        )
-                    else:
-                        vals.append(str(v))
-                buf = _io.StringIO()
-                _csv.writer(
-                    buf, delimiter=";", quoting=_csv.QUOTE_NONNUMERIC,
-                    lineterminator="",
-                ).writerow(vals)
-                lines.append(buf.getvalue())
-            yield pd.DataFrame({"line": lines})
-
-    return df.mapInPandas(fmt, schema="line string")
-
-
-def write_csv(
-    df: DataFrame,
-    path: str,
-    single_file: bool = True,
-    quote_nonnumeric: bool = False,
-) -> None:
-    """`;`-separated CSV sink (NP:100-102). ``single_file`` coalesces to one
-    part for byte-level parity with the reference; leave False at scale.
-
-    ``quote_nonnumeric`` reproduces the P variant's csv.QUOTE_NONNUMERIC
-    staging format (P:121-125). For an all-string frame (the stringified
-    resumo) QUOTE_NONNUMERIC degenerates to quote-everything — Spark's
-    ``quoteAll`` — so the JVM writer suffices. For a TYPED frame (the
-    reference stages the typed per-court frame) the exact semantics —
-    quote only non-numeric cells, ``str()`` float formatting, doubled
-    quotes, NULL → ``""`` — are produced by ``_quote_nonnumeric_lines``
-    and written as text, byte-identical to ``pandas.to_csv(quoting=
-    csv.QUOTE_NONNUMERIC)``."""
-    from pyspark.sql import types as _T
-
-    if quote_nonnumeric and any(
-        not isinstance(f.dataType, _T.StringType) for f in df.schema.fields
-    ):
-        # This typed-exact path is ALWAYS single-file: it reproduces the
-        # reference's per-court temp staging sink (P:121-125), one small
-        # CSV per court — a header line must precede the body, which only
-        # a 1-partition text write can guarantee. ``single_file`` is
-        # intentionally ignored here; the scale path is the quoteAll
-        # branch below over a stringified frame.
-        header_line = ";".join('"%s"' % c.replace('"', '""') for c in df.columns)
-        lines = _quote_nonnumeric_lines(df)
-        header_df = df.sparkSession.createDataFrame([(header_line,)], "line string")
-        # Union partition order puts the 1-partition header frame first.
-        header_df.unionAll(lines.coalesce(1)).coalesce(1).write.mode(
-            "overwrite"
-        ).text(path)
-        return
+def write_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
+    """`;`-separated CSV sink with a header row (NP:100-102), Spark's
+    default minimal quoting. ``single_file`` coalesces to one part for
+    byte-level parity with the reference; leave False at scale."""
     out = df.coalesce(1) if single_file else df
-    opts = {"header": True, "sep": ";"}
-    if quote_nonnumeric:
-        opts["quoteAll"] = True
-    out.write.options(**opts).mode("overwrite").csv(path)
+    out.write.options(header=True, sep=";").mode("overwrite").csv(path)
 
 
 def meta1_debug_trace(
@@ -560,7 +439,6 @@ def run(
     spark: SparkSession,
     input_dir: str,
     output_dir: str | None = None,
-    shared_scan: bool = False,
     debug_court: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """End-to-end: read court CSVs → (ResumoMetas, Consolidado).
@@ -568,23 +446,12 @@ def run(
     Returns (stringified resumo, consolidated union); writes both as
     `;`-CSV when ``output_dir`` is given (NP:224-243).
 
-    ``shared_scan=True``: ONE untyped parse feeds both outputs — the
-    Consolidado re-emits the strings verbatim and the resumo casts its
-    counter columns (``resumo_from_untyped``), persisted across the two
-    sink actions. MEASURED SLOWER at reference scale (9.3 s vs 6.0 s
-    best-of-2 interleaved, scripts/bench_metas_corpus.py): materializing
-    ~1 GB of cached strings costs more than a second 32-thread parse, so
-    two independent scans stay the default. The option remains for
-    deployments where the input re-read is the expensive part (cold
-    object store, pay-per-scan)."""
-    if shared_scan:
-        data = read_court_csvs(spark, input_dir, typed=False).persist()
-        resumo = stringify_resumo(resumo_from_untyped(data))
-        consolidado = data.drop(FILE_COL)
-    else:
-        data = read_court_csvs(spark, input_dir)
-        resumo = stringify_resumo(compute_resumo(data))
-        consolidado = read_court_csvs(spark, input_dir, typed=False).drop(FILE_COL)
+    Two independent scans of ``input_dir``: a typed read (counters as
+    doubles) feeds the metas aggregation, and an untyped read re-emits the
+    input cells verbatim as the by-name Consolidado union (NP:226)."""
+    data = read_court_csvs(spark, input_dir)
+    resumo = stringify_resumo(compute_resumo(data))
+    consolidado = read_court_csvs(spark, input_dir, typed=False).drop(FILE_COL)
     if debug_court is not None:
         # O4 (NP:147): per-court Meta-1 trace, logged before the sinks run.
         # Probe the debugged file's own header (1 line, 1 file) so the NA
@@ -600,6 +467,4 @@ def run(
     if output_dir:
         write_csv(resumo, os.path.join(output_dir, "ResumoMetas.csv"))
         write_csv(consolidado, os.path.join(output_dir, "Consolidado.csv"))
-        if shared_scan:
-            data.unpersist()
     return resumo, consolidado

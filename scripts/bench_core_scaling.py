@@ -26,13 +26,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import force  # noqa: E402
 from metas_judiciarias_etl_spark import registry  # noqa: E402
 from metas_judiciarias_etl_spark.session import build_session  # noqa: E402
 from scripts.bench_scale_curve import ANCHORS, EXPENSIVE  # noqa: E402
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:

@@ -115,17 +115,18 @@ def main() -> None:
     os.makedirs(corpus, exist_ok=True)
     rng = random.Random(7)
     t0 = time.perf_counter()
-    total = 0
     if not os.listdir(corpus):
         for sigla, ramo, template, size in _courts():
-            total += _gen_file(
+            _gen_file(
                 os.path.join(corpus, f"teste_{sigla}.csv"),
                 sigla, ramo, template, size, rng,
             )
-    else:
-        total = sum(
-            os.path.getsize(os.path.join(corpus, f)) for f in os.listdir(corpus)
-        )
+    # Size and count what the pipeline scans: the *.csv files in the dir.
+    csv_paths = [
+        p for p in (os.path.join(corpus, f) for f in os.listdir(corpus))
+        if p.endswith(".csv") and os.path.isfile(p)
+    ]
+    total = sum(os.path.getsize(p) for p in csv_paths)
     gen_s = round(time.perf_counter() - t0, 1)
 
     out_dir = tempfile.mkdtemp(prefix="metas_out_")
@@ -152,15 +153,13 @@ def main() -> None:
         c_s = round(time.perf_counter() - t2, 2)
         return round(time.perf_counter() - t1, 2), r_s, c_s
 
-    # ONE supported path (VERDICT r5 item 7): two_scan. The shared_scan
+    # ONE supported path (VERDICT r5 item 7): two_scan. The shared-scan
     # variant (one untyped parse persisted across both sinks) was measured
     # in rounds 4 AND 5 at ~60% slower (r5: median 17.55 s vs 10.72 s) —
     # materializing ~1 GB of cached strings costs more than a second
-    # 32-thread parse on local disk, every time. It is retired from the
-    # bench; the pipeline still offers run(shared_scan=True) for
-    # deployments where re-reading the input is the expensive part (cold
-    # object store, pay-per-scan), with that trade-off documented at
-    # metas/pipeline.py::run.
+    # 32-thread parse on local disk, every time. It was retired from the
+    # bench after r5 and later deleted from metas/pipeline.py, so
+    # run() now has only this layout.
     #
     # Variance-robust protocol: >=3 trials, EVERY trial recorded plus the
     # median — the first Spark job pays JVM/codegen warmup, and this VM's
@@ -194,12 +193,11 @@ def main() -> None:
         "retired_variants": {
             "shared_scan": "60% slower in r4+r5 (r5 median 17.55s vs "
             "10.72s): persisting ~1GB of parsed strings costs more than a "
-            "second parallel parse on local disk; kept as a pipeline "
-            "option for cold-object-store deployments "
-            "(metas/pipeline.py::run)"
+            "second parallel parse on local disk; deleted from "
+            "metas/pipeline.py::run"
         },
         "corpus_bytes": total,
-        "corpus_files": 90,
+        "corpus_files": len(csv_paths),
         "gen_sec": gen_s,
         "throughput_mb_s": round(total / MB / wall, 1),
         "reference_baseline_sec": {"P_best": 25.28, "P_worst": 81.76,

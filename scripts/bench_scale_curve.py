@@ -27,6 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import force  # noqa: E402
 from metas_judiciarias_etl_spark import registry  # noqa: E402
 from metas_judiciarias_etl_spark.session import build_session  # noqa: E402
 
@@ -49,10 +50,6 @@ ANCHORS = [
     "q1_pricing_summary", "q3_shipping_priority", "q18_large_volume_customers",
     "sessionize_events", "window_running_total",
 ]
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:

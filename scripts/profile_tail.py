@@ -17,6 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import force  # noqa: E402
 from metas_judiciarias_etl_spark import memo, registry  # noqa: E402
 from metas_judiciarias_etl_spark.session import build_session  # noqa: E402
 
@@ -50,10 +51,6 @@ DEFAULT = [
     "basket_association_rules",
     "crosssource_backoff_score",
 ]
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def timed(spark, label, fn, reps=2):

@@ -1,5 +1,5 @@
-"""Sink-side scale features: partitioned layouts that prune, bucketed
-layouts that kill the join shuffle, and single-file parity CSV.
+"""Sink-side scale features: partitioned layouts that prune and bucketed
+layouts that kill the join shuffle.
 
 These are plan/layout tests (sinks have no DuckDB-oracle form): they assert
 the physical properties that make the layouts worth writing at 100 TB —
@@ -134,83 +134,3 @@ def test_dynamic_partition_overwrite(spark, sf_small, tmp_path, status):
     patched = after.filter(F.col("o_orderstatus") == status)
     assert patched.count() > 0
     assert patched.select(F.max("o_totalprice")).first()[0] == 0.0
-
-
-def test_quote_nonnumeric_sink_parity(spark, tmp_path):
-    """P:121-125 staging format: QUOTE_NONNUMERIC over a fully-stringified
-    frame quotes every field — byte parity with csv.QUOTE_NONNUMERIC as
-    pandas writes it for all-string data."""
-    import csv as _csv
-    import glob
-    import io
-    import os
-
-    import pandas as pd
-
-    from metas_judiciarias_etl_spark.metas.pipeline import write_csv
-
-    df = spark.createDataFrame(
-        [("TJSP", "12.5", "NA"), ("TRT3", "7.0", "1.0")],
-        "sigla_tribunal string, meta1 string, meta2a string",
-    )
-    out = str(tmp_path / "quoted.csv")
-    write_csv(df, out, single_file=True, quote_nonnumeric=True)
-    part = glob.glob(os.path.join(out, "*.csv"))[0]
-    with open(part) as fh:
-        got = fh.read()
-
-    buf = io.StringIO()
-    pd.DataFrame(
-        {"sigla_tribunal": ["TJSP", "TRT3"], "meta1": ["12.5", "7.0"],
-         "meta2a": ["NA", "1.0"]}
-    ).to_csv(buf, sep=";", index=False, quoting=_csv.QUOTE_NONNUMERIC)
-    expected = buf.getvalue()
-    assert sorted(got.strip().splitlines()) == sorted(expected.strip().splitlines())
-
-
-def test_quote_nonnumeric_typed_exact_parity(spark, tmp_path):
-    """P:121-125 EXACT semantics on a TYPED drifted frame: numeric cells
-    unquoted with str() float formatting (sci-notation, shortest repr),
-    strings quoted with internal quotes doubled, NULL -> '""'. Byte-identical
-    to pandas.to_csv(quoting=csv.QUOTE_NONNUMERIC)."""
-    import csv as _csv
-    import glob
-    import io
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from metas_judiciarias_etl_spark.metas.pipeline import write_csv
-
-    pdf = pd.DataFrame(
-        {
-            "sigla_tribunal": ["TJ;SP", 'has"quote', None, "TRF1"],
-            "ramo_justica": ["Justiça Estadual", "Justiça do Trabalho", "X", "Justiça Federal"],
-            "julgados_2025": [12.5, np.nan, 1e20, 0.1 + 0.2],
-            "casos_novos_2025": [7.0, -0.0, 1234567.891, 1e-07],
-            # int64 column: Arrow hands the worker np.int64 scalars, which
-            # must print as '5' not '5.0' (ADVICE r5: isinstance(np.int64,
-            # int) is False). 2**53+1 would round if routed through float.
-            "processos_2025": np.array(
-                [3, -17, 0, 9007199254740993], dtype=np.int64
-            ),
-        }
-    )
-    df = spark.createDataFrame(
-        pdf,
-        "sigla_tribunal string, ramo_justica string, "
-        "julgados_2025 double, casos_novos_2025 double, "
-        "processos_2025 long",
-    )
-    out = str(tmp_path / "typed_quoted.csv")
-    write_csv(df, out, single_file=True, quote_nonnumeric=True)
-    parts = glob.glob(os.path.join(out, "part-*"))
-    assert len(parts) == 1
-    with open(parts[0], encoding="utf-8") as fh:
-        got = fh.read()
-
-    buf = io.StringIO()
-    pdf.to_csv(buf, sep=";", index=False, quoting=_csv.QUOTE_NONNUMERIC,
-               lineterminator="\n")
-    assert got == buf.getvalue()
